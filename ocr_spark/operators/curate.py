@@ -4,18 +4,24 @@
 optional benchmark decontamination) as ONE composed pipeline with a
 per-stage accounting table.
 
-Every stage reuses the committed operator it names (`scrub.pii_scrub`,
-`scrub.clean_text`, `textstats.lang_id` / Gopher / C4 expressions,
-`dedup.exact_dedup` semantics, `dedup.minhash_lsh_pairs` +
-`dedup_resolve`, `decontam.contamination`), so this module adds no new
-per-document semantics — only the composition, which is where the
-100 TB design choices live:
+Every stage reuses the committed semantics it names (`scrub.pii_scrub`,
+`scrub.clean_text`, `textstats.lang_id` / Gopher / C4,
+`textstats.dedup_lines_in_doc`, `dedup.exact_dedup` semantics,
+`dedup.minhash_lsh_pairs` + `dedup_resolve`, `decontam.contamination`),
+so this module adds no new per-document semantics — only the
+composition, which is where the 100 TB design choices live:
 
-  * The scalar gates (lang, C4) are computed as COLUMNS in one
-    projection over the scrubbed+cleaned text, and Gopher's
-    repetition signals join in once — the corpus is NOT re-read per
-    stage the way chaining independent filter jobs would (the funnel
-    over k gates costs one pipeline, not k scans).
+  * Every per-document gate signal (lang, Gopher, C4) is computed in
+    ONE projection over the cleaned (or repaired) cut: one Arrow
+    kernel (`textstats.doc_signals`: token count, stopword hits, top
+    bigram) plus Catalyst expressions for the rest (script counts,
+    the lang verdict CASE, the Gopher fractions and gate, the C4
+    lines and flags, the dup-line fraction). That stage has no
+    exchange and no join, and the corpus is NOT re-read per gate the
+    way chaining independent filter jobs would (k gates cost one
+    pipeline, not k scans).
+  * The optional line repair is per-row too (`textstats.
+    dedup_lines_col`): no Window, no groupBy, no join.
   * Set-dependent stages (exact dedup's keep-first, the near-dup
     component resolve, decontamination) run only on the documents
     still alive when they start, in funnel order — the expensive
@@ -28,15 +34,23 @@ per-document semantics — only the composition, which is where the
     of the decisions frame (conjunctions of the verdict columns),
     exploded to rows by a pure expression — no per-stage count jobs.
 
-Python-exchange note: `clean_text` is the pipeline's one Arrow pandas
-UDF (unicode NFC — Spark has no builtin normalizer), and feeding a
-DERIVED expression into a Python-eval node buffers the interpreted
-projection through the python row queue (measured 12x — see
-scrub.clean_text_col). The scrub stage is therefore MATERIALIZED
-before the clean stage via the ``materialize`` hook: localCheckpoint
-by default (an in-memory cut, fine for oracle/test scale), a parquet
-round-trip in `job.py --curate` (the durable form a resumable job
-wants anyway).
+Materialize cuts (the ``materialize`` hook: localCheckpoint by
+default, an in-memory cut fine for oracle/test scale; a parquet
+round-trip in `job.py --curate`, the durable form a resumable job
+wants anyway): feeding a DERIVED expression into a Python-eval node
+buffers the interpreted projection through the python row queue
+(measured 12x — see scrub.clean_text_col), so every Python node
+here reads a bare column of the cut before it:
+
+  * ``scrubbed`` — the scrub regexes, read by the clean-text NFC UDF;
+  * ``cleaned`` — the cleaned text, read by the repair kernel
+    (``repair_lines=True``);
+  * ``cleaned`` (no repair) or ``repaired`` — the text plus its
+    ``normalize_text`` form (`_norm`), read by the signals kernel;
+    lowercasing stays in Catalyst, so Java and Python case mapping
+    never meet;
+  * ``signals`` — the per-document verdicts every set-dependent stage
+    re-reads.
 
 This operator is a JOB STEP (like dedup_resolve): building the
 decisions frame triggers Spark actions (the near-dup component
@@ -58,9 +72,11 @@ from .dedup import dedup_resolve, minhash_lsh_pairs, normalize_text
 from .textstats import (
     C4_MIN_SENTENCES,
     c4_kept_lines,
-    dedup_lines_in_doc,
-    repetition_stats,
-    with_lang_guess,
+    dedup_lines_col,
+    doc_signals,
+    gopher_keep_of_signals,
+    lang_script_inputs,
+    lang_verdict,
 )
 
 #: Funnel stages in published-pipeline order. `repair` appears only
@@ -68,6 +84,9 @@ from .textstats import (
 #: is supplied.
 STAGES = ("input", "scrub", "clean", "repair", "lang", "gopher", "c4",
           "exact_dedup", "neardup", "decontam")
+
+# Internal columns of the gate-signal stages.
+_NORM, _SIG = "_norm", "_sig"
 
 
 def _default_materialize(df: DataFrame, name: str) -> DataFrame:
@@ -92,8 +111,9 @@ def curate(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     "survivors": DataFrame, "funnel": DataFrame}.
 
     ``repair_lines=True`` inserts the in-document duplicate-line
-    REPAIR stage (``textstats.dedup_lines_in_doc`` — trafilatura's
-    per-document dedup option) between clean and the gates: instead of
+    REPAIR stage (``textstats.dedup_lines_in_doc``'s semantics as the
+    per-row kernel ``dedup_lines_col`` — trafilatura's per-document
+    dedup option) between clean and the gates: instead of
     the Gopher dup-line gate DROPPING a line-spam page, the repeats are
     removed and the page is re-judged on what remains. The per-doc
     removal count lands in ``n_dup_lines_removed`` (NULL when the
@@ -103,8 +123,9 @@ def curate(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     scale recommendation — Catalyst higher-order functions evaluate
     interpreted, so the expression signatures cost num_perm
     interpreted passes per document); the oracle twins pass 'md5'
-    explicitly, and the exact-Jaccard verify downstream is
-    hash-independent either way.
+    explicitly. The verify follows the mode: exact string-shingle
+    Jaccard under 'md5', Jaccard over the same 31-bit rolling shingle
+    hashes under 'poly' (it can differ on hash collisions).
 
     decisions — one row per input document:
       (id_col, n_pii_redacted, n_chars_removed, n_dup_lines_removed,
@@ -121,33 +142,36 @@ def curate(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     scrubbed = materialize(
         scrub.pii_scrub(df.select(id_col, text_col), text_col=text_col),
         "scrubbed")
-    # Materialized too: the scalar-gate projection AND the Gopher
-    # bigram aggregation both read the cleaned text — one boundary
-    # here halves the NFC pandas-UDF evaluations.
-    cleaned = materialize(scrub.clean_text(scrubbed, text_col=text_col),
-                          "cleaned")
+    cleaned = scrub.clean_text(scrubbed, text_col=text_col)
 
     # -- optional repair: strip in-document repeated lines so the
     #    Gopher dup-line gate judges the page on its non-boilerplate
-    #    remainder. Materialized: the repair's (id, line) window
-    #    shuffle would otherwise re-run under both the scalar-gate
-    #    projection and the Gopher aggregation below.
+    #    remainder — one per-row kernel over the cleaned cut's bare
+    #    text column.
     if repair_lines:
-        repaired = dedup_lines_in_doc(
-            cleaned.select(id_col, text_col),
-            text_col=text_col, id_col=id_col)
-        cleaned = materialize(
-            cleaned.drop(text_col).join(
-                repaired.withColumnRenamed(
-                    "n_lines_removed", "n_dup_lines_removed"),
-                on=id_col),
-            "repaired")
+        cleaned = materialize(cleaned, "cleaned")
+        fixed = dedup_lines_col(F.col(text_col))
+        cleaned = cleaned.select(
+            id_col, "n_pii_redacted", "n_chars_removed",
+            fixed["text"].alias(text_col),
+            fixed["n_lines_removed"].alias("n_dup_lines_removed"))
     else:
         cleaned = cleaned.withColumn(
             "n_dup_lines_removed", F.lit(None).cast("bigint"))
-
-    # -- scalar gates in ONE projection over the cleaned text
+    # The last transform cut carries the normalized text too, so the
+    # signals kernel reads a bare parquet column.
     c = F.coalesce(F.col(text_col), F.lit(""))
+    cut = materialize(cleaned.withColumn(_NORM, normalize_text(c)),
+                      "repaired" if repair_lines else "cleaned")
+
+    # -- every gate signal in one projection over that cut: the kernel
+    #    (stopword hits, token count, top bigram) plus Catalyst script
+    #    counts and C4 lines; no shuffle, no join.
+    landed = cut.select(
+        id_col, "n_pii_redacted", "n_chars_removed", "n_dup_lines_removed",
+        text_col, _NORM, doc_signals(F.col(_NORM)).alias(_SIG),
+        *lang_script_inputs(c))
+    sig = F.col(_SIG)
     kept_text = F.array_join(c4_kept_lines(c), "\n")
     n_sentences = F.regexp_count(F.col("_c4_text"), F.lit("[.!?]"))
     if c4_bad_words:
@@ -156,23 +180,20 @@ def curate(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             F.array(*[F.lit(w.lower()) for w in c4_bad_words]))
     else:
         has_bad = F.lit(False)
-    scalar = (with_lang_guess(cleaned, text_col).select(
+    dec = (landed.select(
         F.col(id_col), "n_pii_redacted", "n_chars_removed",
-        "n_dup_lines_removed", "lang_guess",
+        "n_dup_lines_removed", lang_verdict(sig).alias("lang_guess"),
         kept_text.alias("_c4_text"),
         (F.lower(c).contains("lorem ipsum") | c.contains("{") | has_bad)
-        .alias("_c4_page_flag"))
+        .alias("_c4_page_flag"),
+        gopher_keep_of_signals(c, F.col(_NORM), sig).alias("gopher_ok"))
         .withColumn("c4_ok", (n_sentences >= C4_MIN_SENTENCES)
                     & ~F.col("_c4_page_flag"))
         .withColumn("lang_ok", F.col("lang_guess").isin(*keep_langs))
-        .drop("_c4_page_flag"))
-
-    # -- Gopher repetition (its bigram aggregation shuffles once) joins in
-    rep = repetition_stats(cleaned, text_col=text_col, id_col=id_col)
-    dec = scalar.join(
-        rep.select(F.col(id_col), F.col("keep").alias("gopher_ok")),
-        on=id_col, how="left")
-    # Second materialize boundary: everything downstream (exact-dedup
+        .select(id_col, "n_pii_redacted", "n_chars_removed",
+                "n_dup_lines_removed", "lang_guess", "_c4_text", "c4_ok",
+                "lang_ok", "gopher_ok"))
+    # The signals cut: everything downstream (exact-dedup
     # grouping, MinHash banding, the iterative component resolve, the
     # funnel aggregation, the decisions write) re-evaluates its inputs
     # per action — without this cut each of those actions would re-run

@@ -191,10 +191,12 @@ def _minhash_signatures_pandas_udf(k: int, num_perm: int):
     Hash-family note: shingles are hashed with a base-257 rolling
     polynomial over UTF-8 BYTES (wraparound uint64, masked to 31 bits)
     instead of xxhash64 over character substrings — an equally uniform
-    family for LSH banding (collision behavior is what matters; the
-    exact-Jaccard verify stage downstream is hash-independent). The
-    permutation constants are _perm_consts, identical to the
-    expression form.
+    family for LSH banding (collision behavior is what matters). The
+    verify stage downstream is NOT independent of this family in
+    'poly' mode: it computes Jaccard over the same 31-bit rolling
+    shingle hashes (_shingle_hashes_pandas_udf), so it differs from
+    string-shingle Jaccard on hash collisions. The permutation
+    constants are _perm_consts, identical to the expression form.
     """
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
@@ -372,13 +374,18 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     drop-counter frame production callers must log (a capped run says
     what it capped).
 
-    hash_mode selects the shingle-hash family for CANDIDATE generation
-    (the exact-Jaccard verify stage downstream is hash-independent):
+    hash_mode selects the shingle-hash family for candidate generation
+    and, in 'poly' mode, for the verify too:
       'poly'     — numpy rolling-hash pandas UDF, one matmul per doc
-                   (fastest; recommended at scale)
-      'xxhash64' — pure-expression JVM form (no python workers needed)
+                   (fastest; recommended at scale). The verify computes
+                   Jaccard over the same 31-bit rolling shingle hashes
+                   (_shingle_hashes_pandas_udf), so it can differ from
+                   string-shingle Jaccard on hash collisions.
+      'xxhash64' — pure-expression JVM form (no python workers needed);
+                   the verify uses exact string shingles
       'md5'      — DuckDB-expressible; the driver oracle replays the
-                   identical algorithm in SQL against this mode
+                   identical algorithm in SQL against this mode; the
+                   verify uses exact string shingles
     """
     df = _spread(df, spread)
     banded = minhash_band_rows(df, text_col=text_col, id_col=id_col, k=k,

@@ -1,14 +1,23 @@
 """Text-analysis operators for corpus curation: language ID, quality
 scoring, token counting, document fingerprinting.
 
-Pure Catalyst expressions end to end — these run inside whole-stage
-codegen over the documents table and are DuckDB-oracle-checkable.
+Catalyst expressions, except for two per-document Arrow kernels
+(``doc_signals``: stopword hits + Gopher top bigram;
+``dedup_lines_col``: in-document line repair) that the hot paths
+(``with_lang_guess``, operators/curate.py) run once per Arrow batch.
+The Column forms (``lang_id``, ``repetition_stats``,
+``dedup_lines_in_doc``) are the reference implementations the tests
+and the DuckDB oracles compare the kernels against.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from .dedup import normalize_text
 
@@ -158,9 +167,10 @@ def lang_id(c: Column) -> Column:
     ``tokens(c)`` re-evaluates inside every stopword filter and the
     cascading argmax whens re-embed earlier hit expressions, so the
     normalize+split chain runs ~L^2 times per document — 19.2s for
-    2055 x 8.6 KB docs. Fine for short rows and oracle fixtures; hot
-    paths use ``with_lang_guess`` (token array + script counts landed
-    in real columns, one pass) — identical verdicts, shuffle-free.
+    2055 x 8.6 KB docs. This is the reference form (oracle fixtures,
+    equivalence tests); hot paths use ``with_lang_guess`` (the
+    ``doc_signals`` kernel + landed script counts) — identical
+    verdicts, shuffle-free.
     """
     tok = tokens(c)
     best_lang = F.lit("und")
@@ -182,58 +192,140 @@ def lang_id(c: Column) -> Column:
     return expr
 
 
-def with_lang_guess(df: DataFrame, text_col: str,
-                    out_col: str = "lang_guess") -> DataFrame:
-    """``lang_id`` as a column-landed two-projection pipeline: the
-    token array, non-whitespace length, and per-script counts land in
-    real columns (evaluated ONCE per document — the multiply-
-    referenced token alias is non-cheap, so CollapseProject keeps the
-    boundary), the per-language hit counts land next, and the verdict
-    is a CASE over integer columns. Identical verdicts to ``lang_id``
-    (script order, strict-> argmax, alphabetical ties, 'und' floor) —
-    see test_textlib's equivalence fuzz — at one normalize+split
-    instead of ~L^2.
+# ---------------------------------------------------------------------------
+# Per-document token kernel: one Python pass per document (a token
+# Counter and a bigram Counter), batched per Arrow batch, over the
+# landed normalized text. Catalyst higher-order functions
+# evaluate interpreted, so the seven stopword filters (one lambda call
+# per token per language) and the Gopher bigram explode + two hash
+# aggregations + join back cost far more than one batched Python pass
+# over a bare column (PAPERS: "Accelerating Python UDFs in Vectorized
+# Query Execution", CIDR 2022). Everything that is cheap in Catalyst
+# (the script counts, the verdict CASE, the Gopher fractions and
+# gates, the C4 rules) stays there.
+# ---------------------------------------------------------------------------
 
-    Shape note (measured, 16k-doc bench slice): an explode +
-    broadcast-stopword-table rewrite (the lmscore/qualityclf shape)
-    was tried and lost to this landed form — 6.34s vs 4.48s warm —
-    because the regex counting fix (``_char_count``) removed the real
-    bottleneck; the landed form is also shuffle-free, which is the
-    right default inside curation funnels that already shuffle
-    elsewhere."""
-    langs = sorted(LANG_STOPWORDS)
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    internal = (["_lg_tok", "_lg_nonws"]
-                + [f"_lg_sc_{lang}" for lang in SCRIPT_ORDER]
-                + [f"_lg_h_{lang}" for lang in langs])
-    landed = df.select(
-        "*", tokens(c).alias("_lg_tok"),
-        _nonws_length(c).alias("_lg_nonws"),
-        *[_char_count(c, SCRIPT_RANGES[lang])
-          .alias(f"_lg_sc_{lang}") for lang in SCRIPT_ORDER])
+_LANGS = sorted(LANG_STOPWORDS)
+# stopword -> indexes into _LANGS of every language listing it
+_SW_LANGS = {w: tuple(i for i, lang in enumerate(_LANGS)
+                      if w in LANG_STOPWORDS[lang])
+             for w in set().union(*LANG_STOPWORDS.values())}
 
-    def _hit(lang):
-        sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-        return F.size(F.filter(F.col("_lg_tok"),
-                               lambda t: F.array_contains(sw, t)))\
-            .alias(f"_lg_h_{lang}")
+# doc_signals struct fields, in order.
+_DOC_SIGNAL_FIELDS = (["n_tokens"] + [f"h_{lang}" for lang in _LANGS]
+                      + ["bigram_cnt", "top_bigram"])
+_DOC_SIGNALS_SCHEMA = ", ".join(
+    [f"{f} int" for f in _DOC_SIGNAL_FIELDS[:-2]]
+    + ["bigram_cnt bigint", "top_bigram string"])
 
-    hits = landed.select("*", *[_hit(lang) for lang in langs])
-    mx = F.greatest(*[F.col(f"_lg_h_{lang}") for lang in langs])
-    # Stopword argmax: first lang (sorted order) holding the max —
-    # the strict `>` scan of lang_id keeps the earliest winner.
+
+def _doc_signals_row(norm: str) -> tuple:
+    """(n_tokens, *stopword hits in _LANGS order, bigram_cnt,
+    top_bigram) of one ``normalize_text`` value. The tokens are
+    ``tokens()``'s: Spark's trim strips U+0020 only, then split on
+    U+0020 (never str.split(), which also splits on whitespace Java's
+    \\s leaves in place, e.g. U+00A0). Ties on the bigram count go to
+    the larger string — code-point order, which is the UTF-8 byte order
+    ``max(struct(cnt, bigram))`` compares."""
+    tok = norm.strip(" ").split(" ")
+    if tok == [""]:
+        return (0,) + (0,) * len(_LANGS) + (0, "")
+    counts = Counter(tok)
+    hits = [0] * len(_LANGS)
+    for w in counts.keys() & _SW_LANGS.keys():
+        for i in _SW_LANGS[w]:
+            hits[i] += counts[w]
+    if len(tok) < 2:
+        return (len(tok), *hits, 0, "")
+    bigrams = Counter(zip(tok, tok[1:]))
+    top = max(bigrams.values())
+    # Tokens hold no U+0020, so joining is injective; only the tied
+    # pairs are joined (tuple order is not string order).
+    best = max(" ".join(b) for b, n in bigrams.items() if n == top)
+    return (len(tok), *hits, top, best)
+
+
+def _doc_signals_frame(norm: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame([_doc_signals_row(x) for x in norm.fillna("")],
+                        columns=_DOC_SIGNAL_FIELDS)
+
+
+def doc_signals(norm: Column) -> Column:
+    """Struct of per-document token signals of a ``normalize_text``
+    column: the token count (0 for empty text, the ``token_count``
+    convention), the per-language stopword hit counts ``h_<lang>``
+    (what ``lang_id``'s filters count) and the Gopher top bigram
+    (``bigram_cnt``, ``top_bigram``; 0 and '' under two tokens — what
+    ``repetition_stats``' aggregation yields).
+
+    Pass a BARE column (landed in a parquet cut or a projection the
+    optimizer keeps): a derived input is evaluated in the Python
+    node's input projection with the text buffered through its row
+    queue (scrub.clean_text_col measured 12x). Lowercasing stays in
+    Catalyst (normalize_text), so Java and Python case mapping never
+    meet."""
+    return pandas_udf(_doc_signals_frame, _DOC_SIGNALS_SCHEMA)(norm)
+
+
+def lang_script_inputs(c: Column) -> list[Column]:
+    """Non-whitespace length and per-script counts of ``c`` as the
+    ``_lg_*`` columns ``lang_verdict`` reads — land them in a
+    projection of their own (the verdict references the length once
+    per script)."""
+    return [_nonws_length(c).alias("_lg_nonws")] + [
+        _char_count(c, SCRIPT_RANGES[lang]).alias(f"_lg_sc_{lang}")
+        for lang in SCRIPT_ORDER]
+
+
+_LANG_SCRIPT_COLS = ["_lg_nonws"] + [f"_lg_sc_{lang}" for lang in SCRIPT_ORDER]
+
+
+def lang_verdict(sig: Column) -> Column:
+    """``lang_id``'s verdict as a CASE over integer columns: the
+    ``lang_script_inputs`` columns and the stopword hits of a
+    ``doc_signals`` struct. Stopword argmax = first language (sorted
+    order) holding the max — the strict `>` scan of lang_id keeps the
+    earliest winner; no hits -> 'und'; the script vote overrides, in
+    SCRIPT_ORDER."""
+    hits = {lang: sig[f"h_{lang}"] for lang in _LANGS}
+    mx = F.greatest(*hits.values())
     guess = F.lit("und")
-    for lang in reversed(langs):
-        guess = F.when(F.col(f"_lg_h_{lang}") == mx,
-                       F.lit(lang)).otherwise(guess)
+    for lang in reversed(_LANGS):
+        guess = F.when(hits[lang] == mx, F.lit(lang)).otherwise(guess)
     guess = F.when(mx == 0, F.lit("und")).otherwise(guess)
-    # Script vote overrides, checked in SCRIPT_ORDER.
     for lang in reversed(SCRIPT_ORDER):
         guess = F.when(
             F.col(f"_lg_sc_{lang}").cast("double")
             > F.lit(script_threshold(lang)) * F.col("_lg_nonws"),
             F.lit(lang)).otherwise(guess)
-    return hits.withColumn(out_col, guess).drop(*internal)
+    return guess
+
+
+def with_lang_guess(df: DataFrame, text_col: str,
+                    out_col: str = "lang_guess") -> DataFrame:
+    """``lang_id`` as landed columns plus the ``doc_signals`` kernel:
+    the non-whitespace length and script counts land in one
+    projection, the kernel counts every language's stopword hits in
+    one pass over the normalized text, and the verdict is
+    ``lang_verdict``'s CASE over integers. Identical verdicts to
+    ``lang_id`` (test_scale_ops' equivalence cases and property test),
+    shuffle-free, one normalize per document instead of ~L^2.
+
+    Shape notes (660 x 9.6 KB docs, local[4], 4 vCPU): the seven
+    landed ``filter(tok, t -> array_contains(sw, t))`` lambdas this
+    replaces evaluate interpreted, one call per token per language —
+    ~1.8 s of the curate signals cut; this form takes 0.88 s against
+    1.27 s for the whole landed-lambda form. With no cut upstream the
+    optimizer folds the single-use ``_lg_norm`` projection into the
+    Python node's input, so the normalize runs in that node's input
+    projection; curate lands the normalized text in its parquet cut
+    instead and feeds the kernel a bare column."""
+    c = F.coalesce(F.col(text_col), F.lit(""))
+    landed = df.select("*", normalize_text(c).alias("_lg_norm"),
+                       *lang_script_inputs(c))
+    sig = landed.select("*", doc_signals(F.col("_lg_norm")).alias("_lg_sig"))
+    return (sig.withColumn(out_col, lang_verdict(F.col("_lg_sig")))
+            .drop("_lg_norm", "_lg_sig", *_LANG_SCRIPT_COLS))
 
 
 def fingerprint(c: Column) -> Column:
@@ -352,17 +444,39 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
            .select(
                F.col(id_col), "n_tokens", "dup_line_frac",
                F.coalesce(F.col("top_bigram"), F.lit("")).alias("top_bigram"),
-               F.when(
-                   F.col("_cnt").isNull() | (F.col("_nchars") == 0),
-                   F.lit(0.0))
-               .otherwise(F.round(
-                   F.col("_cnt") * F.length("top_bigram")
-                   / F.col("_nchars"), 6)).alias("top_bigram_frac")))
+               F.when(F.col("_cnt").isNull(), F.lit(0.0))
+               .otherwise(top_bigram_frac(F.col("_cnt"), F.col("top_bigram"),
+                                          F.col("_nchars")))
+               .alias("top_bigram_frac")))
     return out.withColumn(
-        "keep",
-        (F.col("dup_line_frac") <= GOPHER_MAX_DUP_LINE_FRAC)
-        & ((F.col("n_tokens") < GOPHER_MIN_TOKENS_FOR_BIGRAM_GATE)
-           | (F.col("top_bigram_frac") <= GOPHER_MAX_TOP_BIGRAM_FRAC)))
+        "keep", gopher_keep(F.col("dup_line_frac"), F.col("n_tokens"),
+                            F.col("top_bigram_frac")))
+
+
+def top_bigram_frac(cnt: Column, bigram: Column, nchars: Column) -> Column:
+    """Share of the normalized characters the top bigram covers:
+    count x len(bigram) / len(normalize_text), 0 for empty text."""
+    return F.when(nchars == 0, F.lit(0.0)).otherwise(
+        F.round(cnt * F.length(bigram) / nchars, 6))
+
+
+def gopher_keep(dup_line_frac: Column, n_tokens: Column,
+                bigram_frac: Column) -> Column:
+    """The two-signal Gopher gate (the bigram gate applies from
+    GOPHER_MIN_TOKENS_FOR_BIGRAM_GATE tokens on)."""
+    return ((dup_line_frac <= GOPHER_MAX_DUP_LINE_FRAC)
+            & ((n_tokens < GOPHER_MIN_TOKENS_FOR_BIGRAM_GATE)
+               | (bigram_frac <= GOPHER_MAX_TOP_BIGRAM_FRAC)))
+
+
+def gopher_keep_of_signals(c: Column, norm: Column, sig: Column) -> Column:
+    """``repetition_stats``' keep from a ``doc_signals`` struct ``sig``
+    over ``norm`` = normalize_text(c): the dup-line fraction of ``c``
+    and the top-bigram fraction stay Catalyst expressions."""
+    return gopher_keep(
+        F.round(dup_line_fraction(c), 6), sig["n_tokens"],
+        top_bigram_frac(sig["bigram_cnt"], sig["top_bigram"],
+                        F.length(norm)))
 
 
 def gopher_quality_filter(df: DataFrame, text_col: str = "text",
@@ -698,12 +812,13 @@ def dedup_lines_in_doc(df: DataFrame, text_col: str = "text",
     lines are structure, short lines collide by chance — same floor as
     line_dedup).
 
-    Scale shape: posexplode -> first-occurrence mark (row_number over
-    (id, line) by position — O(L log L) per doc; an in-array
-    array_position filter would be O(L^2) exactly on the line-spam
-    documents this operator targets) -> ordered reassembly, the same
-    collect/sort shape as line_dedup. Exempt lines skip the window
-    (they keep every occurrence). Returns (id, text,
+    This is the Column reference form the tests and the DuckDB oracle
+    compare ``dedup_lines_col`` against: posexplode -> first-occurrence
+    mark (row_number over (id, line) by position) -> ordered
+    reassembly, the same collect/sort shape as line_dedup — a Window
+    shuffle, a groupBy and (to rejoin other columns) a join for what is
+    per-document work. operators/curate.py runs the per-row kernel
+    ``dedup_lines_col`` instead. Returns (id, text,
     n_lines_removed)."""
     c = F.coalesce(F.col(text_col), F.lit(""))
     lines = df.select(
@@ -723,6 +838,38 @@ def dedup_lines_in_doc(df: DataFrame, text_col: str = "text",
                 lambda s: s["line"]),
             "\n").alias(text_col),
         F.sum(F.col("_drop").cast("int")).alias("n_lines_removed")))
+
+
+def _dedup_lines_row(text: str, min_chars: int) -> tuple[str, int]:
+    """(text, n_lines_removed) of one document: ``dedup_lines_in_doc``
+    per row. Lines split/join on "\\n" only ("\\r" stays part of its
+    line); the exemption uses Spark's trim (U+0020 only) and
+    code-point length, like ``length(trim(line))``."""
+    seen: set[str] = set()
+    kept = []
+    for line in text.split("\n"):
+        if len(line) >= min_chars and len(line.strip(" ")) >= min_chars:
+            if line in seen:
+                continue
+            seen.add(line)
+        kept.append(line)
+    n = text.count("\n") + 1 - len(kept)
+    return ("\n".join(kept) if n else text), n
+
+
+def dedup_lines_col(c: Column,
+                    min_chars: int = LINE_DEDUP_MIN_CHARS) -> Column:
+    """``dedup_lines_in_doc`` as a per-row Arrow kernel: struct
+    (text, n_lines_removed), NULL text -> ('', 0). No Window, no
+    groupBy, no join — the document never leaves its row. Pass a BARE
+    column (see ``doc_signals``)."""
+
+    def frame(s: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(
+            [_dedup_lines_row(x, min_chars) for x in s.fillna("")],
+            columns=["text", "n_lines_removed"])
+
+    return pandas_udf(frame, "text string, n_lines_removed bigint")(c)
 
 
 # ---------------------------------------------------------------------------

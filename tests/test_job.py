@@ -782,6 +782,17 @@ def test_job_substr_dedup_flag_validation(tmp_path):
             job.main(base + extra)
 
 
+def test_job_substr_exact_contradicting_sample_fails(tmp_path, capsys):
+    """--substr-exact with ANY explicit --substr-sample is an error,
+    the default modulus 8 included — never a silent override."""
+    base = ["--synth", "4", "--table", str(tmp_path / "t"),
+            "--substr-dedup", str(tmp_path / "sd"), "--substr-exact"]
+    for sample in ("8", "1", "4"):
+        with pytest.raises(SystemExit):
+            job.main(base + ["--substr-sample", sample])
+        assert "mutually exclusive" in capsys.readouterr().err
+
+
 def test_job_substr_dedup_default_sampling_catches_copies(spark, tmp_path):
     """The DEFAULT --substr-sample 8 (estimate mode — the exact
     default was a wall-time trap at realistic scale) still drops a

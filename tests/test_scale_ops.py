@@ -4,11 +4,153 @@ multimodal plumbing, streaming ingest."""
 import math
 
 import pytest
+from hypothesis import Phase, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from ocr_spark.operators import dedup, multimodal, similarity, textstats
+from ocr_spark.operators import (curate, dedup, multimodal, similarity,
+                                 textstats)
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+# Inputs the Python kernels must treat exactly like the Catalyst
+# reference forms: whitespace Java's \\s does not match (U+00A0,
+# U+0085, U+2028), CRLF line ends, tab-led and space-only lines, lines
+# at the 15-char repair floor, non-ASCII uppercase (lowercased by
+# Catalyst, never by Python), top-bigram count ties, empty and
+# single-token text.
+PLANTED = [
+    None, "", "word", "The", "a b", "b a a b",
+    "x y x y z w z w",                    # bigram tie: 'z w' > 'x y'
+    "the\u00a0cat and\u00a0the dog of it",
+    "the\u0085cat and the\u2028dog of a pan",
+    "line one is here ok\r\nline one is here ok\r\nline one",
+    "\tabcdefghijklmn\n\tabcdefghijklmn\n   \n   \n \t \n \t ",
+    "abcdefghijklmno\nabcdefghijklmno\nabcdefghijklmn \nabcdefghijklmn ",
+    " abcdefghijklmno \n abcdefghijklmno \nabcdefghijklmno",
+    "İSTANBUL İS THE CİTY AND THE ΟΔΟΣ ΟΔΟΣ",
+    "ΣΟΦΟΣ ΣΟΦΟΣ ΣΟΦΟΣ the and the ΣΟΦΟΣ",
+    "de la de la de la el le het de",
+    "日本語のページ the and of 本文です",
+    "click here " * 12 + "unique 7",
+]
+
+
+def _kernel_gopher(df):
+    """repetition_stats' columns computed the way curate does: the
+    doc_signals kernel over the landed normalize_text column."""
+    c = F.coalesce(F.col("text"), F.lit(""))
+    landed = df.select("doc_id", c.alias("_c"),
+                       dedup.normalize_text(c).alias("_norm"))
+    sig = F.col("_sig")
+    return (landed.select("*", textstats.doc_signals(F.col("_norm"))
+                          .alias("_sig"))
+            .select("doc_id", sig["n_tokens"].alias("n_tokens"),
+                    sig["top_bigram"].alias("top_bigram"),
+                    textstats.top_bigram_frac(
+                        sig["bigram_cnt"], sig["top_bigram"],
+                        F.length("_norm")).alias("top_bigram_frac"),
+                    textstats.gopher_keep_of_signals(
+                        F.col("_c"), F.col("_norm"), sig).alias("keep")))
+
+
+def _assert_kernels_match_references(spark, texts):
+    """with_lang_guess == lang_id, the kernel Gopher columns ==
+    repetition_stats, dedup_lines_col == dedup_lines_in_doc, row by
+    row. The Gopher reference sees NULL text as '' (its keep is NULL
+    on a NULL row; curate's text is never NULL after clean)."""
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    ref_lang = {r["doc_id"]: r["g"] for r in df.select(
+        "doc_id", textstats.lang_id(F.col("text")).alias("g")).collect()}
+    got_lang = {r["doc_id"]: r["lang_guess"] for r in
+                textstats.with_lang_guess(df, "text").collect()}
+    assert got_lang == ref_lang
+    cols = ["n_tokens", "top_bigram", "top_bigram_frac", "keep"]
+    ref_rep = {r["doc_id"]: tuple(r[c] for c in cols)
+               for r in textstats.repetition_stats(
+                   df.fillna({"text": ""})).collect()}
+    got_rep = {r["doc_id"]: tuple(r[c] for c in cols)
+               for r in _kernel_gopher(df).collect()}
+    assert got_rep == ref_rep
+    ref_fix = {r["doc_id"]: (r["text"], r["n_lines_removed"])
+               for r in textstats.dedup_lines_in_doc(df).collect()}
+    fixed = textstats.dedup_lines_col(F.col("text"))
+    got_fix = {r["doc_id"]: (r["t"], r["n"]) for r in df.select(
+        "doc_id", fixed["text"].alias("t"),
+        fixed["n_lines_removed"].alias("n")).collect()}
+    assert got_fix == ref_fix
+
+
+_TOKENS = ["the", "and", "of", "la", "de", "el", "le", "et", "het", "il",
+           "o", "que", "und", "x", "y", "The", "AND", "İS", "İSTANBUL",
+           "ΟΔΟΣ", "ΣΟΦΟΣ", "日本語の", "это", "abcdefghijklmno"]
+_SEPS = [" ", "  ", "\t", "\u00a0", "\u0085", "\u2028", "\r", " \t "]
+_FLOOR = ["abcdefghijklmno", " abcdefghijklmn", "\tabcdefghijklmn",
+          "abcdefghijklmn ", "    ", "\t", ""]
+_line = st.one_of(
+    st.sampled_from(_FLOOR),
+    st.lists(st.tuples(st.sampled_from(_SEPS), st.sampled_from(_TOKENS)),
+             min_size=1, max_size=8)
+    .map(lambda ps: "".join(sep + w for sep, w in ps)))
+
+
+@st.composite
+def _doc(draw):
+    """A document whose lines come from a small pool, so repeats (the
+    repair target) and bigram ties are common."""
+    pool = draw(st.lists(_line, min_size=1, max_size=4))
+    lines = draw(st.lists(st.sampled_from(pool), max_size=8))
+    return draw(st.sampled_from(["\n", "\r\n"])).join(lines)
+
+
+_docs_strategy = st.lists(st.one_of(st.none(), st.just(""), _doc()),
+                          min_size=1, max_size=8)
+
+
+class _StopAfterSignals(Exception):
+    pass
+
+
+def _curate_cuts(df, repair_lines):
+    """curate()'s materialized cuts up to and including signals (the
+    funnel stops there: the dedup stages are not under test)."""
+    cuts = {}
+
+    def mat(d, name):
+        cuts[name] = d.localCheckpoint()
+        if name == "signals":
+            raise _StopAfterSignals
+        return cuts[name]
+
+    with pytest.raises(_StopAfterSignals):
+        curate.curate(df, repair_lines=repair_lines, materialize=mat)
+    return cuts
+
+
+def _assert_curate_matches_references(spark, texts, repair_lines):
+    """curate's signals (and repair) cuts against lang_id,
+    repetition_stats and dedup_lines_in_doc over the same cleaned
+    rows."""
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    cuts = _curate_cuts(df, repair_lines)
+    judged = cuts["repaired" if repair_lines else "cleaned"]
+    if repair_lines:
+        ref_fix = {r["doc_id"]: (r["text"], r["n_lines_removed"])
+                   for r in textstats.dedup_lines_in_doc(
+                       cuts["cleaned"]).collect()}
+        got_fix = {r["doc_id"]: (r["text"], r["n_dup_lines_removed"])
+                   for r in judged.collect()}
+        assert got_fix == ref_fix
+    ref = {r["doc_id"]: (r["g"], r["keep"]) for r in judged.join(
+        textstats.repetition_stats(judged), "doc_id").select(
+        "doc_id", textstats.lang_id(F.col("text")).alias("g"),
+        "keep").collect()}
+    got = {r["doc_id"]: (r["lang_guess"], r["gopher_ok"])
+           for r in cuts["signals"].collect()}
+    assert got == ref
 
 
 @pytest.fixture(scope="module")
@@ -699,7 +841,7 @@ class TestTextStats:
             "the la the la the la",          # cross-language tie text
             "de de de",                      # 'de' is a stopword in many
             "a \t b\n\nc  d",
-        ])]
+        ] + PLANTED)]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         slow = {r["doc_id"]: r["g"] for r in df.select(
             "doc_id", textstats.lang_id(F.col("text")).alias("g"))
@@ -739,6 +881,19 @@ class TestTextStats:
         assert out[1]["top_bigram"] == ""
         assert out[2]["top_bigram"] == "a b"
         assert all(out[i]["keep"] for i in range(3))
+
+    def test_repetition_stats_equals_kernel_signals(self, spark):
+        """The doc_signals kernel + Catalyst fractions (the curate
+        gate path) reproduce repetition_stats on every planted shape:
+        ties go to the larger bigram string, U+00A0/U+0085/U+2028 stay
+        inside tokens, non-ASCII case is Catalyst's."""
+        _assert_kernels_match_references(spark, PLANTED)
+        out = {r["doc_id"]: r for r in _kernel_gopher(
+            spark.createDataFrame(list(enumerate(PLANTED)),
+                                  "doc_id long, text string")).collect()}
+        assert out[6]["top_bigram"] == "z w"
+        assert out[0]["n_tokens"] == 0 and out[0]["top_bigram"] == ""
+        assert out[2]["n_tokens"] == 1 and out[2]["top_bigram_frac"] == 0.0
 
     def test_repetition_full_gates_and_values(self, spark):
         """The FULL Gopher Table A1 suite: each planted pathology
@@ -812,6 +967,31 @@ class TestTextStats:
         assert out[0]["n_lines_removed"] == 1
         assert out[1]["text"] == d1 and out[1]["n_lines_removed"] == 0
         assert out[2]["text"] == "" and out[2]["n_lines_removed"] == 0
+        # The per-row kernel curate runs agrees with this reference
+        # form (PLANTED runs through the same check in
+        # test_repetition_stats_equals_kernel_signals).
+        _assert_kernels_match_references(spark, [d0, d1, None])
+
+    def test_curate_signals_and_repair_equal_references(self, spark):
+        """curate's signals cut (lang_guess, gopher_ok) and repair cut
+        equal lang_id / repetition_stats / dedup_lines_in_doc over the
+        same cleaned rows, with and without repair."""
+        for repair_lines in (True, False):
+            _assert_curate_matches_references(spark, PLANTED, repair_lines)
+
+    # Each example runs several Spark jobs: no shrink phase, so a
+    # failure reports its first falsifying corpus within seconds.
+    @settings(max_examples=10, deadline=None,
+              phases=[Phase.explicit, Phase.reuse, Phase.generate])
+    @given(texts=_docs_strategy)
+    def test_kernels_equal_references_property(self, spark, texts):
+        _assert_kernels_match_references(spark, texts)
+
+    @settings(max_examples=6, deadline=None,
+              phases=[Phase.explicit, Phase.reuse, Phase.generate])
+    @given(texts=_docs_strategy)
+    def test_curate_equals_references_property(self, spark, texts):
+        _assert_curate_matches_references(spark, texts, repair_lines=True)
 
     def test_line_dedup_removes_corpus_boilerplate(self, spark):
         """A line shared by more than max_doc_freq documents vanishes
@@ -975,8 +1155,8 @@ class TestMultimodal:
 
     def test_decode_dispatch_gates(self):
         from ocr_spark.textlib import imagecodec as ic
-        # Baseline JPEG decodes natively now; corrupt JPEG bytes are a
-        # format error (progressive is the remaining gated process).
+        # Baseline and progressive JPEG decode natively; corrupt JPEG
+        # bytes are a format error.
         with pytest.raises(ic.ImageFormatError):
             multimodal.decode_image(b"\xff\xd8\xff\xe0 not a real jpeg")
         with pytest.raises(ic.ImageFormatError):

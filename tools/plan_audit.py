@@ -365,6 +365,39 @@ def main() -> None:
           and "ExistingRDD" in p,
           f"ExistingRDD={'ExistingRDD' in p}")
 
+    # 9o2. The curate gate-signal and repair stages are per-document
+    #     work: each stage plan (the frame handed to its materialize
+    #     cut) has NO Exchange and exactly ONE Arrow Python node, whose
+    #     input is a bare column of the scan of the cut before it —
+    #     never the Gopher bigram shuffle, never a derived expression
+    #     in the Python node's input projection (scrub.clean_text_col).
+    from ocr_spark.operators import curate as curate_ops
+    stage_plans = {}
+
+    def _capture(df, name):
+        stage_plans[name] = plan_of(df)
+        return df.localCheckpoint()
+
+    curate_ops.curate(entrymod._funnel_docs(spark, sf_dir),
+                      hash_mode="md5", repair_lines=True,
+                      materialize=_capture)
+    for name in ("repaired", "signals"):
+        p = plans[f"curate_stage({name})"] = stage_plans[name]
+        arrow = [b for b in p.split("\n\n")
+                 if _re.match(r"\(\d+\) ArrowEvalPython", b)]
+        bare = len(arrow) == 1 and bool(_re.search(
+            r"Arguments: \[\w+\(\w+#\d+L?\)#\d+\]", arrow[0]))
+        scan_fed = "+- ArrowEvalPython" in p and _re.search(
+            r"ArrowEvalPython \(\d+\)\n\s+\+- \* Scan ExistingRDD", p)
+        n_python = sum(p.count(m) for m in (
+            "BatchEvalPython", "MapInPandas", "MapInArrow"))
+        check(f"curate_stage({name})",
+              "no Exchange; one Arrow node over a bare column of the cut",
+              "Exchange" not in p and "Join" not in p and bare
+              and bool(scan_fed) and n_python == 0,
+              f"ArrowEvalPython x{len(arrow)}, bare={bare}, "
+              f"exchange={'Exchange' in p}")
+
     # 8f. Web graph (operators/webgraph.py): the outlink extraction is
     #    one Arrow pass (MapInPandas, no row UDF); host_rank's power
     #    iteration keeps every host-sized join keyed — the ONLY
